@@ -122,7 +122,7 @@ def _with_zones_array(features: DataFrame, index: ZoneIndex, vertices_col: str, 
     spark = features.sparkSession
     zpdf = _zones_meta_pdf(index)
     zones = spark.createDataFrame(
-        zpdf.to_dict("records"),
+        zpdf,
         "zone_id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
     ).agg(F.collect_list(F.struct("zone_id", "edges")).alias("_zs"))
     feats = (

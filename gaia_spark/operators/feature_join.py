@@ -498,7 +498,7 @@ def feature_spatial_join(
         ["zone_id", "kind", "min_lat", "min_lon", "max_lat", "max_lon", "edges"]
     ]
     zmeta = spark.createDataFrame(
-        zmeta_pdf.to_dict("records"),
+        zmeta_pdf,
         "zone_id long, kind string, min_lat double, min_lon double, "
         "max_lat double, max_lon double, "
         "edges array<struct<y1:double,x1:double,y2:double,x2:double>>",

@@ -114,17 +114,21 @@ class ZoneIndex:
         return cls(res=res, cover_pdf=cover, prepared=prepared, zones_pdf=zones_pdf)
 
     def cover_df(self, spark: SparkSession) -> DataFrame:
-        # memoized per session: the records conversion + schema inference
-        # costs ~0.5 s of SERIAL driver time per call — pure Amdahl loss
-        # that showed up directly in N-vs-4N scaling measurements
-        # keyed by the session OBJECT (identity compare, strong ref) — an
-        # id()-keyed cache could collide after the old session is GC'd and
-        # CPython reuses its id, returning a DataFrame bound to a dead session
+        # built from the pandas frame, not from a list of row dicts: with
+        # Arrow on, the frame becomes a JVM-side LocalRelation
+        # (LocalTableScan). A list of rows becomes a pickled Python RDD
+        # (Scan ExistingRDD) that every broadcasting query re-pickles in
+        # forked Python workers: ~0.25 s of a ~0.8 s warm unit plan of the
+        # benchmark's resumable ingest.
+        # memoized per session, keyed by the session OBJECT (identity
+        # compare, strong ref) — an id()-keyed cache could collide after the
+        # old session is GC'd and CPython reuses its id, returning a
+        # DataFrame bound to a dead session
         cache = getattr(self, "_cover_df_cache", None)
         if cache is not None and cache[0] is spark:
             return cache[1]
         df = spark.createDataFrame(
-            self.cover_pdf.to_dict("records"),
+            self.cover_pdf,
             "zone_id long, cell long, full boolean, kind string, "
             "min_lat double, min_lon double, max_lat double, max_lon double, "
             "edges array<struct<y1:double,x1:double,y2:double,x2:double>>",

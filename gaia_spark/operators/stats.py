@@ -59,7 +59,7 @@ def polygon_contiguity_weights(
 
     zpdf = index.zones_pdf[["zone_id", "vertices"]].rename(columns={"zone_id": "_zid"})
     feats = spark.createDataFrame(
-        zpdf.to_dict("records"),
+        zpdf,
         "_zid long, vertices array<struct<lat:double,lon:double>>",
     )
     pred = "touches_rook" if contiguity == "rook" else "touches"

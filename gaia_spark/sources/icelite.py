@@ -15,6 +15,12 @@ Commit protocol: data is written to a fresh uuid dir (never overwritten),
 the manifest is written to a temp name and os.rename'd into place, then
 CURRENT is swapped by rename — readers always see a complete snapshot.
 On a real deployment this maps 1:1 onto Iceberg append/overwrite commits.
+
+``append``/``overwrite`` take a Spark ``DataFrame`` (data: one Spark write
+job) or a ``pyarrow.Table`` (metadata-sized rows such as lineage: written by
+the driver with ``pq.write_table``, no Spark job — Iceberg writes its commit
+metadata from the driver too). ``files`` lists the current snapshot for such
+driver-side reads.
 """
 
 from __future__ import annotations
@@ -23,7 +29,10 @@ import json
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 class IceTable:
@@ -76,38 +85,48 @@ class IceTable:
         os.rename(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
         return manifest
 
+    def files(self) -> list[str]:
+        """Data files of the current snapshot (empty for an empty table)."""
+        snap = self._current_snapshot()
+        return snap["files"] if snap else []
+
     # -- write ------------------------------------------------------------------
-    def _write_files(self, df: DataFrame) -> list[str]:
+    def _write_files(self, data: DataFrame | pa.Table) -> tuple[list[str], str]:
+        """Write ``data`` to a fresh commit dir; returns (files, schema json)."""
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
-        df.write.parquet(commit_dir)
-        return sorted(
+        if isinstance(data, pa.Table):
+            os.makedirs(commit_dir)
+            path = os.path.join(commit_dir, "part-00000.parquet")
+            pq.write_table(data, path)
+            return [path], from_arrow_schema(data.schema).json()
+        data.write.parquet(commit_dir)
+        files = sorted(
             os.path.join(commit_dir, f)
             for f in os.listdir(commit_dir)
             if f.endswith(".parquet")
         )
+        return files, data.schema.json()
 
     @staticmethod
     def _file_rows(files: list[str]) -> int:
         """Row count from parquet footers — metadata only, no plan
         re-execution (the Iceberg-manifest row-count role)."""
-        import pyarrow.parquet as pq
-
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
-    def append(self, df: DataFrame, meta: dict | None = None) -> dict:
+    def append(self, data: DataFrame | pa.Table, meta: dict | None = None) -> dict:
         parent = self._current_snapshot()
-        files = self._write_files(df)
+        files, schema = self._write_files(data)
         meta = dict(meta or {})
         meta["added_rows"] = self._file_rows(files)
         prior = parent["files"] if parent else []
-        return self._commit(prior + files, df.schema.json(), "append", parent, files, meta)
+        return self._commit(prior + files, schema, "append", parent, files, meta)
 
-    def overwrite(self, df: DataFrame, meta: dict | None = None) -> dict:
+    def overwrite(self, data: DataFrame | pa.Table, meta: dict | None = None) -> dict:
         parent = self._current_snapshot()
-        files = self._write_files(df)
+        files, schema = self._write_files(data)
         meta = dict(meta or {})
         meta["added_rows"] = self._file_rows(files)
-        return self._commit(files, df.schema.json(), "overwrite", parent, files, meta)
+        return self._commit(files, schema, "overwrite", parent, files, meta)
 
     def committed_meta_values(self, key: str) -> set:
         """All values of ``meta[key]`` across committed snapshots — the

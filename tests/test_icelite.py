@@ -1,5 +1,6 @@
 """icelite snapshots + resumable-job exactly-once semantics (SURVEY.md §7 M5)."""
 
+import pyarrow as pa
 import pytest
 
 from gaia_spark.sources.icelite import IceTable
@@ -27,6 +28,10 @@ def test_snapshot_append_and_time_travel(spark, tmp_path):
     t.overwrite(spark.range(2).selectExpr("id AS v"))
     assert t.read(spark).count() == 2
     assert len(t.snapshots()) == 3
+    # a pyarrow table commits from the driver, same layout and schema
+    t.overwrite(pa.table({"v": [7]}))
+    assert [tuple(r) for r in t.read(spark).collect()] == [(7,)]
+    assert t.read(spark).schema.simpleString() == "struct<v:bigint>"
 
 
 def test_resume_skips_done_units(spark, tmp_path):
@@ -124,3 +129,65 @@ def test_stream_batch_replay_is_skipped(spark, tmp_path):
     assert write_stream_batch(t2, batch, 0) is False  # replayed id skipped
     assert write_stream_batch(t2, batch, 1) is True
     assert t2.read(spark).count() == 14
+
+
+def test_quoted_job_id_crash_and_resume(spark, tmp_path):
+    """A job id holding a quote must survive the done-unit lookup (it was
+    once spliced into a SQL string and raised a ParseException)."""
+    out, lin = make_tables(tmp_path)
+    job = ResumableJob(spark, "o'brien", out, lin)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        job.run(UNITS, process, fail_after=2)
+    assert job.done_units() == set(UNITS[:2])
+    assert job.run(UNITS, process) == {"processed": 4, "skipped": 2}
+    assert out.read(spark).count() == 60
+    # another job's lineage rows in the same table are not this job's
+    assert ResumableJob(spark, "o'brien2", out, lin).done_units() == set()
+
+
+def test_resumable_run_costs_one_spark_job_per_unit(spark, tmp_path):
+    """Per unit, only the data append runs on Spark: the done-unit lookup,
+    the rollback of an orphaned commit and the lineage appends run on the
+    driver and trigger no Spark job."""
+    out, lin = make_tables(tmp_path)
+    job = ResumableJob(spark, "jobs", out, lin)
+    with pytest.raises(RuntimeError):
+        job.run(UNITS, process, fail_after=2)
+    # a torn commit for the next unit: data landed, lineage did not
+    out.append(process(spark, UNITS[2]), meta={"job_id": "jobs", "unit": UNITS[2]})
+
+    sc = spark.sparkContext
+    group = f"resumable-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "ResumableJob.run resume")
+    try:
+        stats = job.run(UNITS, process)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats == {"processed": 4, "skipped": 2}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land asynchronously
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == stats["processed"]
+    assert out.read(spark).count() == 60  # the orphan was rolled back
+
+
+def test_lineage_mixes_spark_and_arrow_rows(spark, tmp_path):
+    """A lineage table first written by Spark (one row per unit as a
+    DataFrame) keeps reading back with the same schema once the driver
+    appends pyarrow-written rows to it."""
+    ddl = (
+        "job_id string, unit string, status string, output_rows long, "
+        "attempt int, started_unix double, finished_unix double"
+    )
+    out, lin = make_tables(tmp_path)
+    lin.append(spark.createDataFrame([("mix", UNITS[0], "done", 10, 1, 0.0, 1.0)], ddl))
+    old_schema = spark.createDataFrame([], ddl).schema
+    job = ResumableJob(spark, "mix", out, lin)
+    assert job.done_units() == {UNITS[0]}
+    assert job.run(UNITS, process) == {"processed": 5, "skipped": 1}
+
+    df = lin.read(spark)
+    assert df.schema == old_schema
+    assert lin._current_snapshot()["schema"] == old_schema.json()
+    rows = df.collect()
+    assert sorted(r.unit for r in rows) == UNITS
+    assert {(r.status, r.attempt) for r in rows} == {("done", 1)}
+    assert job.done_units() == set(UNITS)

@@ -42,6 +42,33 @@ def test_spatial_join_is_broadcast_and_python_free(spark):
     # ZERO python stages: geoparse is JVM regexp_extract; refinement JVM
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "SortMergeJoin" not in plan
+    # the broadcast cover is an Arrow-built LocalRelation, not a pickled
+    # Python RDD that forks Python workers on every broadcasting query
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+
+
+def test_feature_join_zone_side_is_python_free(spark):
+    """The feature join's zone metadata is built through Arrow too: a
+    silent fallback to the pickled-rows path would show as ExistingRDD."""
+    import pandas as pd
+
+    from gaia_spark.operators.feature_join import feature_spatial_join
+
+    idx = ZoneIndex.build(synth_zones_pdf(16))
+    square = lambda a, b: [  # noqa: E731
+        {"lat": a, "lon": b}, {"lat": a, "lon": b + 2.0},
+        {"lat": a + 2.0, "lon": b + 2.0}, {"lat": a + 2.0, "lon": b},
+    ]
+    feats = spark.createDataFrame(
+        pd.DataFrame({"fid": [1, 2, 3], "vertices": [square(10.0 * i, 20.0 * i) for i in (1, 2, 3)]}),
+        "fid long, vertices array<struct<lat:double,lon:double>>",
+    )
+    out = feature_spatial_join(feats, idx, predicate="intersects", feature_key="fid")
+    plan = plan_of(out)
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_knn_sql_path_is_python_free_after_geoparse(spark, tmp_path):
